@@ -245,8 +245,8 @@ def _ensure_scaled_dir(spark, sf_dir: str, factor: int) -> str:
     # replicas can never be made time-disjoint — a bigger event table
     # IS a denser folded day, exactly what the driver's larger SFs look
     # like.  The link queries therefore density-scale here (candidate
-    # pairs grow superlinearly; the banded join + burst salt are what
-    # keep the measured growth sub-quadratic), while the id-keyed and
+    # pairs grow superlinearly; the banded join is what keeps the
+    # measured growth sub-quadratic), while the id-keyed and
     # documents-side queries scale linearly on their disjoint replica
     # worlds.  A timestamp shift per replica would be a no-op through
     # the day fold (any whole-day shift vanishes; sub-day shifts just

@@ -24,7 +24,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from simpy__kafka__flink__kafka_spark.functions.dedup import (  # noqa: E402
     minhash_lsh_pairs)
 from simpy__kafka__flink__kafka_spark.operators.linking import (  # noqa: E402
-    link_traces)
+    aggregate_adjacency, link_edges, link_traces)
 from simpy__kafka__flink__kafka_spark.schemas import (  # noqa: E402
     messages_from_events)
 from simpy__kafka__flink__kafka_spark.session import get_spark  # noqa: E402
@@ -53,8 +53,9 @@ def main() -> None:
     best: dict[str, float] = {}
     for _ in range(args.reps):
         for name, build in [
-            ("link_traces_banded", lambda: link_traces(msgs, banded=True)),
-            ("link_traces_naive", lambda: link_traces(msgs, banded=False)),
+            ("link_traces_banded", lambda: link_traces(msgs)),
+            ("link_traces_naive",
+             lambda: aggregate_adjacency(msgs, link_edges(msgs))),
             ("minhash_lsh_pairs", lambda: minhash_lsh_pairs(docs)),
         ]:
             dt = materialize(spark, build())

@@ -25,8 +25,8 @@ from simpy__kafka__flink__kafka_spark.session import (  # noqa: E402
 from simpy__kafka__flink__kafka_spark.sources.generator import (  # noqa: E402
     rate_spans_source)
 from simpy__kafka__flink__kafka_spark.streaming.pipeline import (  # noqa: E402
-    aggregate_bridge, aggregate_bridge_v2, deduped_link_edges,
-    link_traces_two_phase, streaming_link_edges)
+    aggregate_bridge, deduped_link_edges, link_traces_two_phase,
+    streaming_link_edges)
 
 
 def _digest(progress: list) -> dict:
@@ -69,9 +69,8 @@ def two_stage(spark, args) -> None:
         spans, bridge, tempfile.mkdtemp(prefix="soak_ck1_"))
     # give phase 1 a head start so the bridge dir exists with data
     time.sleep(10)
-    agg = aggregate_bridge_v2 if args.v2 else aggregate_bridge
     q2 = (
-        agg(spark, bridge)
+        aggregate_bridge(spark, bridge)
         .writeStream.format("noop")
         .option("checkpointLocation", tempfile.mkdtemp(prefix="soak_ck2_"))
         .outputMode("append")
@@ -87,7 +86,7 @@ def two_stage(spark, args) -> None:
         q2.stop()
     print(json.dumps({
         "experiment": "streaming_soak",
-        "topology": "two_stage_full_v2_tws" if args.v2 else "two_stage_full",
+        "topology": "two_stage_full",
         "rate": args.rate, "seconds": args.seconds, "hosts": args.hosts,
         "max_latency_ms": args.max_latency_ms,
         "phase1_link": _digest(p1),
@@ -106,9 +105,6 @@ def main() -> None:
     ap.add_argument("--two-stage", action="store_true",
                     help="full pipeline: join -> bridge -> stateful "
                          "aggregation (RocksDB), both phases concurrent")
-    ap.add_argument("--v2", action="store_true",
-                    help="with --two-stage: phase 2 on the native "
-                         "transformWithStateInPandas operator")
     args = ap.parse_args()
 
     if args.two_stage:

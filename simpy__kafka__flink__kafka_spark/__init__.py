@@ -4,7 +4,7 @@ service-call spans), rebuilt Spark-first.
 
 Layout
 ------
-- ``session``    : SparkSession factory tuned for local[32] tests / cluster scale.
+- ``session``    : SparkSession factory sized from the machine (local mode).
 - ``schemas``    : canonical message schema + message-view derivation from testdata.
 - ``operators/`` : the reference's operators as DataFrame transformations
   (interval-containment self-join, adjacency-list aggregation, watermark ops).

@@ -68,25 +68,13 @@ def link_edges(msgs: DataFrame) -> DataFrame:
     )
 
 
-def link_edges_banded(msgs: DataFrame, band_ms: int = MAX_LATENCY_MS,
-                      salt: int = 1) -> DataFrame:
+def link_edges_banded(msgs: DataFrame, band_ms: int = MAX_LATENCY_MS) -> DataFrame:
     """Edge discovery via bounded-range band join (the scale path).
 
     Parents explode into every time band their interval touches (at most 2
     when ``band_ms >= max span length``); children join on their start band.
     Join key ``(ip, band)`` breaks per-IP skew and bounds per-task pair counts
     regardless of total data volume.
-
-    ``salt > 1`` is the burst-skew escape hatch: when a traffic burst puts
-    a huge span population inside ONE (ip, band) cell, the in-cell pair
-    enumeration is inherently quadratic and — without help — lands on one
-    task.  Salting splits each cell ``salt`` ways: children take a
-    deterministic salt bucket (hash of id), parents replicate into every
-    bucket (fragment-replicate), so the same total comparisons spread
-    across ``salt`` tasks.  Exactly-once is preserved — each child row
-    exists in exactly one (band, salt) cell and the parent copy in that
-    cell is unique.  Default 1 leaves the plan untouched; see
-    ``experiments/burst_skew_ab.py`` for the measured recipe.
     """
     band = F.lit(int(band_ms))
     p = (
@@ -102,68 +90,39 @@ def link_edges_banded(msgs: DataFrame, band_ms: int = MAX_LATENCY_MS,
     )
     c = msgs.withColumn("band", (F.col("start_at_ms") / band).cast("long"))
     cond = (F.col("p.band") == F.col("c.band")) & _containment_cond()
-    if salt > 1:
-        p = p.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        c = c.withColumn(
-            "salt", F.pmod(F.xxhash64("id"), F.lit(salt)).cast("int")
-        )
-        cond = cond & (F.col("p.salt") == F.col("c.salt"))
     return p.alias("p").join(c.alias("c"), cond, "inner").select(
         F.col("p.id").alias("parent_id"), F.col("c.id").alias("child_id")
     )
 
 
-def link_edges_banded_adaptive(msgs: DataFrame,
-                               band_ms: int = MAX_LATENCY_MS,
-                               pair_budget: int = 50_000_000,
-                               max_salt: int = 64) -> DataFrame:
-    """The PLANS.md burst recipe as code: probe the (ip, band) cell
-    population with one cheap count aggregation, estimate the worst-case
-    in-cell pair enumeration (max parents x max children over cells), and
-    pick ``salt = ceil(worst_pairs / pair_budget)`` before running the
-    banded join.  A uniform workload probes to salt=1 (plan identical to
-    :func:`link_edges_banded`); a burst cell gets spread over enough tasks
-    that no task enumerates more than ~``pair_budget`` pairs.
+def edge_updates(edges: DataFrame) -> DataFrame:
+    """Edge -> ``add_child``@parent + ``add_parent``@child update rows
+    (reference ``expand_updates``, ``simpy_kafka_reader.py:105-115``).
 
-    Eager by design (the probe is a count action, like the fixpoint CC's
-    convergence check) — so this lives OUTSIDE the lazily-declared query
-    registry; batch jobs call it directly.  The probe costs one shuffle of
-    (ip, band, side) counts — O(distinct cells), trivially cheap next to
-    the join it protects.  AQE cannot do this for us: its skew detection
-    keys on input bytes and a burst cell's input is tiny
-    (``experiments/burst_skew_ab.py``).
+    The one explode behind the batch fold (:func:`aggregate_adjacency`) and
+    the streaming bridge (``streaming/stateful.edge_update_events``).
+    Output columns: ``key_id, event_type, other_id``, then every edge
+    column other than ``parent_id``/``child_id`` (the streaming join's
+    ``event_ts``) unchanged.
     """
-    band = F.lit(int(band_ms))
-    p_cells = (
-        msgs.withColumn(
-            "band",
-            F.explode(
-                F.sequence(
-                    (F.col("start_at_ms") / band).cast("long"),
-                    (F.col("end_at_ms") / band).cast("long"),
-                )
-            ),
+    carry = [c for c in edges.columns if c not in ("parent_id", "child_id")]
+
+    def update(key: str, kind: str, other: str):
+        return F.struct(
+            F.col(key).alias("key_id"),
+            F.lit(kind).alias("event_type"),
+            F.col(other).alias("other_id"),
+            *(F.col(c) for c in carry),
         )
-        .groupBy("dst_ip", "band")
-        .agg(F.count(F.lit(1)).alias("n_p"))
-    )
-    c_cells = (
-        msgs.withColumn("band", (F.col("start_at_ms") / band).cast("long"))
-        .groupBy("src_ip", "band")
-        .agg(F.count(F.lit(1)).alias("n_c"))
-    )
-    worst = (
-        p_cells.join(
-            c_cells,
-            (p_cells.dst_ip == c_cells.src_ip) & (p_cells.band == c_cells.band),
-        )
-        .agg(F.max(F.col("n_p") * F.col("n_c")).alias("w"))
-        .collect()[0]["w"]
-    )
-    salt = 1 if not worst else min(max_salt, -(-int(worst) // pair_budget))
-    return link_edges_banded(msgs, band_ms, salt=salt)
+
+    return edges.select(
+        F.explode(
+            F.array(
+                update("parent_id", "add_child", "child_id"),
+                update("child_id", "add_parent", "parent_id"),
+            )
+        ).alias("u")
+    ).select("u.*")
 
 
 def aggregate_adjacency(msgs: DataFrame, edges: DataFrame) -> DataFrame:
@@ -176,35 +135,19 @@ def aggregate_adjacency(msgs: DataFrame, edges: DataFrame) -> DataFrame:
     multi-parent test compares as a set, ``test_chain_linking.py:124``).
     """
     # One pass over the edge stream: each edge explodes into an
-    # add_parent@child and an add_child@parent update row (the reference's
-    # expand_updates trick, simpy_kafka_reader.py:105-115), so the join
+    # add_parent@child and an add_child@parent update row, so the join
     # subtree executes ONCE and a single groupBy folds both arrays.  The
     # naive two-aggregation formulation re-executes the join per side —
     # visible as two BroadcastHashJoins in the physical plan and 2x the
     # dominant cost at scale.
-    updates = edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("child_id").alias("id"),
-                    F.col("parent_id").alias("other"),
-                    F.lit("p").alias("kind"),
-                ),
-                F.struct(
-                    F.col("parent_id").alias("id"),
-                    F.col("child_id").alias("other"),
-                    F.lit("c").alias("kind"),
-                ),
-            )
-        ).alias("u")
-    ).select("u.*")
-    adj = updates.groupBy("id").agg(
-        F.array_sort(
-            F.collect_set(F.when(F.col("kind") == "p", F.col("other")))
-        ).alias("parents"),
-        F.array_sort(
-            F.collect_set(F.when(F.col("kind") == "c", F.col("other")))
-        ).alias("children"),
+    def fold(kind: str):
+        return F.array_sort(
+            F.collect_set(F.when(F.col("event_type") == kind, F.col("other_id")))
+        )
+
+    adj = edge_updates(edges).groupBy(F.col("key_id").alias("id")).agg(
+        fold("add_parent").alias("parents"),
+        fold("add_child").alias("children"),
     )
     empty = F.array().cast("array<string>")
     return msgs.join(adj, "id", "left").select(
@@ -214,12 +157,10 @@ def aggregate_adjacency(msgs: DataFrame, edges: DataFrame) -> DataFrame:
     )
 
 
-def link_traces(msgs: DataFrame, banded: bool = True,
-                band_ms: int = MAX_LATENCY_MS) -> DataFrame:
+def link_traces(msgs: DataFrame, band_ms: int = MAX_LATENCY_MS) -> DataFrame:
     """The flagship query: full link-and-aggregate pipeline.
 
     Input: span DataFrame with ``MSG_SCHEMA`` columns.
     Output: same columns + sorted ``parents``/``children`` string arrays.
     """
-    edges = link_edges_banded(msgs, band_ms) if banded else link_edges(msgs)
-    return aggregate_adjacency(msgs, edges)
+    return aggregate_adjacency(msgs, link_edges_banded(msgs, band_ms))

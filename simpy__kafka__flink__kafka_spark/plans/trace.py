@@ -12,7 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..operators.linking import aggregate_adjacency, link_edges, link_edges_banded
+from ..operators.linking import (
+    aggregate_adjacency, edge_updates, link_edges, link_edges_banded)
 from ..schemas import MESSAGES_SQL_DUCKDB, messages_from_events
 from . import Query
 
@@ -182,22 +183,7 @@ SELECT 'child'  AS role, src_ip AS ip_key, id FROM messages
 
 def _q_update_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = link_edges_banded(messages_from_events(spark, sf_dir))
-    return edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("add_child").alias("event_type"),
-                    F.col("parent_id").alias("key_id"),
-                    F.col("child_id").alias("other_id"),
-                ),
-                F.struct(
-                    F.lit("add_parent").alias("event_type"),
-                    F.col("child_id").alias("key_id"),
-                    F.col("parent_id").alias("other_id"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.event_type", "e.key_id", "e.other_id")
+    return edge_updates(edges).select("event_type", "key_id", "other_id")
 
 
 _UPDATE_EXPLODE_SQL = f"""

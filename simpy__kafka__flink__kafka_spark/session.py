@@ -1,9 +1,9 @@
 """SparkSession factory.
 
-Local mode for tests/bench; the same configs are the ones that matter on a
-real cluster (AQE for runtime re-planning and skew-join splitting, UTC
-session timezone so epoch-millis expressions are stable, Arrow for any
-pandas exchange).
+Local mode for tests/bench, sized from the machine it runs on; the same
+configs are the ones that matter on a real cluster (AQE for runtime
+re-planning and skew-join splitting, UTC session timezone so epoch-millis
+expressions are stable, Arrow for any pandas exchange).
 """
 
 from __future__ import annotations
@@ -11,8 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-from ._protobuf_compat import ensure_protobuf
 
 
 def enable_rocksdb_state(spark: SparkSession) -> None:
@@ -32,15 +30,26 @@ def enable_rocksdb_state(spark: SparkSession) -> None:
     )
 
 
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 16g: the driver heap shares the box
+    with the Python workers and the OS page cache."""
+    with open("/proc/meminfo") as f:
+        total_mb = int(f.readline().split()[1]) // 1024  # MemTotal, kB
+    return f"{min(total_mb // 2, 16 * 1024)}m"
+
+
 def get_spark(app_name: str = "simpy_kafka_flink_kafka_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    # transformWithStateInPandas needs google.protobuf in driver AND workers;
-    # resolve it (possibly via a vendored runtime + PYTHONPATH export) BEFORE
-    # the JVM launches so forked python workers inherit the environment.
-    ensure_protobuf()
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """Local session on every core this process may run on.
+
+    ``SPARK_GRAFT_CPUS`` (a count, or ``*``) and ``SPARK_DRIVER_MEM`` (a
+    JVM size such as ``2048m``) override the machine-derived defaults.
+    """
+    machine_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(machine_cpus))
     if shuffle_partitions is None:
-        shuffle_partitions = int(cpus) if cpus.isdigit() else 32
+        shuffle_partitions = int(cpus) if cpus.isdigit() else machine_cpus
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -50,7 +59,7 @@ def get_spark(app_name: str = "simpy_kafka_flink_kafka_spark",
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         # status-store metadata only (no execution effect): the bench reads
         # per-query executor task time as cumulative deltas from the

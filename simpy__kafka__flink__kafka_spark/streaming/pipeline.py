@@ -11,15 +11,19 @@ Spark-first mapping decisions (SURVEY.md §7 Phase 3):
   ``simpy_kafka_reader.py:94-102``) dissolves: a stream-stream self-join on
   ``p.dst_ip == c.src_ip`` IS the per-IP pairing, with join-state eviction
   driven by the watermark instead of per-record timers.
-* The containment predicate carries an explicit time-range bound
-  (``c.start BETWEEN p.start AND p.start + MAX_LATENCY``) so Spark can derive
-  state watermarks for BOTH sides — without it the join state grows forever.
-  The bound is sound because ``end = start + latency <= start + MAX_LATENCY``
-  (reference spec bound: 20 s, ``requirements-v2.md:17``).
+* The join predicate is the batch containment predicate
+  (``operators/linking._containment_cond``) plus an explicit time-range
+  bound (``c.start BETWEEN p.start AND p.start + MAX_LATENCY``) so Spark can
+  derive state watermarks for BOTH sides — without it the join state grows
+  forever.  The bound is sound because
+  ``end = start + latency <= start + MAX_LATENCY`` (reference spec bound:
+  20 s, ``requirements-v2.md:17``).
 * Spark restricts chaining two stateful operators in one query, so the full
-  pipeline is two queries bridged by a sink (mirroring the reference's own
-  two-phase design, ``README.md:30``), or — for exact emit-time parity — the
-  custom stateful aggregation in ``streaming/stateful.py``.
+  pipeline is two queries bridged by a parquet sink (mirroring the
+  reference's own two-phase design, ``README.md:30``):
+  :func:`link_traces_two_phase` writes edge updates and message events to
+  the bridge, :func:`aggregate_bridge` folds them with the custom stateful
+  aggregation in ``streaming/stateful.py``.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.linking import _containment_cond
 from ..schemas import MAX_LATENCY_MS, MSG_SCHEMA
 
 WATERMARK = "30 seconds"  # SIMPY_MAX_OUT_OF_ORDER_MS=30000 (simpy_kafka_reader.py:28)
@@ -74,80 +79,18 @@ def streaming_link_edges(spans: DataFrame,
     p = spans.alias("p")
     c = spans.alias("c")
     cond = (
-        (F.col("p.dst_ip") == F.col("c.src_ip"))
-        & (F.col("p.id") != F.col("c.id"))
+        _containment_cond()
         & (F.col("c.start_ts") >= F.col("p.start_ts"))
         & (
             F.col("c.start_ts")
             <= F.col("p.start_ts") + F.expr(f"INTERVAL {max_latency_ms} MILLISECONDS")
         )
-        & (F.col("c.end_at_ms") <= F.col("p.end_at_ms"))
     )
     return p.join(c, cond, "inner").select(
         F.col("p.id").alias("parent_id"),
         F.col("c.id").alias("child_id"),
         F.col("c.start_ts").alias("event_ts"),
     )
-
-
-def streaming_link_edges_outer(spans: DataFrame,
-                               max_latency_ms: int = MAX_LATENCY_MS) -> DataFrame:
-    """Left-outer variant of the interval join (SURVEY §2.3 J1's outer
-    mapping): every span emits at least one row in its parent role —
-    matched ones per child, unmatched ones once with a NULL child_id after
-    the watermark closes their match window.  This reproduces the
-    reference's every-message-reaches-output observable at the JOIN rather
-    than via the aggregation's left-outer assembly; null rows are the
-    'childless span' signal."""
-    p = spans.alias("p")
-    c = spans.alias("c")
-    cond = (
-        (F.col("p.dst_ip") == F.col("c.src_ip"))
-        & (F.col("p.id") != F.col("c.id"))
-        & (F.col("c.start_ts") >= F.col("p.start_ts"))
-        & (
-            F.col("c.start_ts")
-            <= F.col("p.start_ts") + F.expr(f"INTERVAL {max_latency_ms} MILLISECONDS")
-        )
-        & (F.col("c.end_at_ms") <= F.col("p.end_at_ms"))
-    )
-    return p.join(c, cond, "leftOuter").select(
-        F.col("p.id").alias("parent_id"),
-        F.col("c.id").alias("child_id"),
-        F.col("p.start_ts").alias("event_ts"),
-    )
-
-
-def enrich_spans_static(spans: DataFrame, services: DataFrame) -> DataFrame:
-    """Stream-static enrichment: join the span stream against a static
-    dimension (IP -> service name).  Stateless on the stream side — Spark
-    broadcasts/rescans the static relation per micro-batch, no watermark or
-    state involved; the standard pattern for attaching reference data at
-    any scale."""
-    return spans.join(
-        F.broadcast(services), spans.dst_ip == services.ip, "left"
-    ).drop("ip")
-
-
-def expand_updates(edges: DataFrame) -> DataFrame:
-    """R4: edge -> add_child@parent + add_parent@child events
-    (reference ``expand_updates``, ``simpy_kafka_reader.py:105-115``)."""
-    return edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.lit("add_child").alias("event_type"),
-                    F.col("parent_id").alias("key_id"),
-                    F.col("child_id").alias("other_id"),
-                ),
-                F.struct(
-                    F.lit("add_parent").alias("event_type"),
-                    F.col("child_id").alias("key_id"),
-                    F.col("parent_id").alias("other_id"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.event_type", "e.key_id", "e.other_id")
 
 
 def serialize_linked(linked: DataFrame) -> DataFrame:
@@ -249,68 +192,6 @@ def link_traces_two_phase(spans: DataFrame, bridge_dir: str, checkpoint1: str,
     )
 
 
-def link_traces_foreach_batch(spans: DataFrame, accum_dir: str, out_dir: str,
-                              checkpoint: str):
-    """foreachBatch variant (SURVEY.md §7 Phase 3's 'simplest parity' path):
-    each micro-batch appends raw spans to an accumulator and re-links the
-    full accumulated set with the BATCH core, overwriting ``out_dir``.
-
-    Exactly the reference's final-result semantics with none of the
-    state-management subtlety — correct at backfill/replay scale where the
-    accumulated set fits a batch job; the two-phase watermarked pipeline is
-    the unbounded-stream path.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        accumulate_and_relink(batch_df, batch_id, accum_dir, out_dir)
-
-    return (
-        spans.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def accumulate_and_relink(batch_df: DataFrame, batch_id: int,
-                          accum_dir: str, out_dir: str) -> None:
-    """One foreachBatch step: accumulate the batch's spans, re-link the full
-    set.  foreachBatch is at-least-once — a batch may be re-delivered after a
-    failure/restart — so each batch writes to its own ``batch_id=<id>``
-    partition with overwrite: a redelivery rewrites the same partition
-    instead of appending duplicate span rows (replay-idempotent)."""
-    from ..operators.linking import link_traces
-
-    batch_df.select(
-        "id", "src_ip", "dst_ip", "start_at_ms", "latency_msec", "end_at_ms"
-    ).write.mode("overwrite").parquet(f"{accum_dir}/batch_id={batch_id}")
-    spark = batch_df.sparkSession
-    all_spans = spark.read.parquet(accum_dir).drop("batch_id")
-    link_traces(all_spans).write.mode("overwrite").parquet(out_dir)
-
-
-def adjacency_update_mode(updates: DataFrame) -> DataFrame:
-    """A1's declarative streaming twin: ``groupBy(key_id) + collect_set`` in
-    UPDATE output mode — each micro-batch re-emits every touched key with
-    its current adjacency arrays (SURVEY §2.4 A1's 'update mode' mapping).
-
-    Simpler than the timer-based stateful operator and fully declarative,
-    but a non-windowed aggregation never evicts state, so this is the
-    bounded-replay / dashboard path; ``stateful.aggregate_updates_stream``
-    remains the unbounded path with the reference's emit-at-watermark
-    semantics."""
-    return updates.groupBy("key_id").agg(
-        F.array_sort(
-            F.collect_set(
-                F.when(F.col("event_type") == "add_parent", F.col("other_id"))
-            )
-        ).alias("parents"),
-        F.array_sort(
-            F.collect_set(
-                F.when(F.col("event_type") == "add_child", F.col("other_id"))
-            )
-        ).alias("children"),
-    )
-
-
 def aggregate_bridge(spark: SparkSession, bridge_dir: str,
                      watermark: str = WATERMARK) -> DataFrame:
     """Phase 2 source+operator: read the bridge stream and apply the
@@ -323,21 +204,3 @@ def aggregate_bridge(spark: SparkSession, bridge_dir: str,
         .parquet(bridge_dir)
     )
     return aggregate_updates_stream(updates, watermark)
-
-
-def aggregate_bridge_v2(spark: SparkSession, bridge_dir: str,
-                        watermark: str = WATERMARK) -> DataFrame:
-    """Phase 2 on the native ``transformWithStateInPandas`` operator
-    (``stateful_v2.AdjacencyProcessor``) — same bridge contract as
-    :func:`aggregate_bridge`; requires the RocksDB state store
-    (``session.enable_rocksdb_state``) and a usable protobuf runtime
-    (``_protobuf_compat``)."""
-    from .stateful import UPDATE_SCHEMA
-    from .stateful_v2 import aggregate_updates_stream_v2
-
-    updates = (
-        spark.readStream.schema(UPDATE_SCHEMA)
-        .option("latestFirst", "false")
-        .parquet(bridge_dir)
-    )
-    return aggregate_updates_stream_v2(updates, watermark)

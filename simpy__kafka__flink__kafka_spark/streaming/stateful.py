@@ -4,26 +4,27 @@ exact reference emit semantics (``MessageAggregationProcess``,
 
 * state per message id: the span (first-write-wins), insertion-ordered
   de-duplicated parents/children lists, the span's ``end_at_ms``;
-* a record is emitted exactly when the event-time watermark passes its
-  ``end_at_ms`` (reference ``:247-264``), after which state is evicted;
+* a record is emitted when the key's timer fires, after which state is
+  evicted;
 * arrays are emitted sorted (SURVEY.md §7.3 canonicalization).
 
 Everything else in the pipeline is declarative; this operator exists for
 emit-time parity only — final-result parity is already covered by the
-batch path.  The reference's 60 s processing-time idle flush (``:303-310``)
-runs CONCURRENTLY with the event-time timer; Spark allows one timeout kind
-per operator, so three modes ship here: pure event-time
-(:func:`aggregate_updates_stream`), pure idle flush
-(:func:`aggregate_updates_stream_idle`), and the dual-timer emulation
-(:func:`aggregate_updates_stream_dual`) that folds both deadlines onto the
-event-time clock — full parity except under a globally stalled watermark
-(see :func:`make_dual_timer_fn`).
+batch path.  One fold (:func:`_fold`) serves every emit policy; the policy
+is the timer it arms after each invocation.  The reference's 60 s
+processing-time idle flush (``:303-310``) runs CONCURRENTLY with the
+event-time timer; Spark allows one timeout kind per operator, so the
+policy is chosen per query: event-time emit at ``end_at_ms``
+(:func:`aggregate_updates_stream`, W2), processing-time idle flush
+(:func:`aggregate_updates_stream_idle`, W3), or both deadlines folded onto
+the event-time clock (:func:`aggregate_updates_stream_dual`) — full parity
+except under a globally stalled watermark (see :func:`_dual_timer`).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import pandas as pd
@@ -31,6 +32,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.linking import edge_updates
 
 # input: union of 'message' events (full span) and add_parent/add_child
 # update events, keyed by key_id, with the event-time column 'event_ts'
@@ -93,77 +96,18 @@ def _emit_row(msg: dict[str, Any], parents: list[str],
     )
 
 
-def aggregate_adjacency_fn(
-    key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    if state.exists:
-        msg_json, parents_json, children_json, end_ms = state.get
-    else:
-        msg_json, parents_json, children_json, end_ms = None, "[]", "[]", None
-    msg = json.loads(msg_json) if msg_json else None
-    parents: list[str] = json.loads(parents_json)
-    children: list[str] = json.loads(children_json)
-
-    if state.hasTimedOut:
-        # watermark passed end_at_ms -> emit and evict (reference :247-264)
-        state.remove()
-        if msg is not None:
-            yield _emit_row(msg, parents, children)
-        return
-
-    for pdf in pdfs:
-        for row in pdf.itertuples(index=False):
-            if row.event_type == "message":
-                if msg is None and row.payload:  # first-write-wins (:230-236)
-                    msg = json.loads(row.payload)
-                    end_ms = int(msg.get("end_at_ms", 0))
-            elif row.event_type == "add_parent":
-                _append_unique(parents, row.other_id)
-            elif row.event_type == "add_child":
-                _append_unique(children, row.other_id)
-
-    state.update((
-        json.dumps(msg) if msg is not None else None,
-        json.dumps(parents),
-        json.dumps(children),
-        end_ms,
-    ))
-    if end_ms is not None:
-        # event-time timer at end_at_ms (reference :159, :236)
-        state.setTimeoutTimestamp(int(end_ms))
-    else:
-        # Orphan update-only state (edge updates arrived but the 'message'
-        # event was dropped as late / lands in a later batch): without a
-        # timer this key would leak forever.  The reference cleans such keys
-        # via its concurrent 60 s processing-time idle flush, which Spark's
-        # one-timeout-kind constraint drops here — so register a fallback
-        # event-time eviction at watermark + the OOO horizon instead.  If the
-        # message event does arrive before that, the timer is re-registered
-        # to end_at_ms above; the timed-out branch emits nothing for
-        # msg-less state, so eviction is silent, matching the reference's
-        # idle flush of a bare-updates key (simpy_kafka_reader.py:303-310).
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + ORPHAN_EVICT_HORIZON_MS
-        )
-    return
-
-
 IDLE_FLUSH_MS = 60_000  # SIMPY_IDLE_FLUSH_MS default (simpy_kafka_reader.py:29)
 ORPHAN_EVICT_HORIZON_MS = 60_000  # orphan-state TTL past the watermark
 
 
-def make_idle_flush_fn(idle_ms: int = IDLE_FLUSH_MS):
-    """W3 variant: processing-time idle flush (reference
-    ``simpy_kafka_reader.py:29, 248-254, 303-310`` — SIMPY_IDLE_FLUSH_MS).
+def _fold(arm_timer: Callable[[GroupState, int | None], None]):
+    """The adjacency fold for ``applyInPandasWithState``.
 
-    On ``idle_ms`` of key inactivity the buffered record is emitted then
-    state cleared, so sparse keys produce output even if the watermark
-    stalls.  Spark allows one timeout kind per operator, so this mode trades
-    the event-time emit for the idle flush — the reference runs both timers
-    at once, which is the documented divergence (SURVEY.md §7.1).
-
-    Returned as a closure so the horizon serializes with the function
-    (module globals are re-imported fresh inside Python workers).
+    A timed-out key emits its record (if its 'message' event arrived) and
+    is evicted (reference ``:247-264``).  Otherwise the batch's events fold
+    into state and ``arm_timer(state, end_ms)`` sets the key's next
+    deadline.  Returned as a closure so the timer policy serializes with
+    the function.
     """
 
     def fn(key, pdfs: Iterator[pd.DataFrame],
@@ -185,7 +129,7 @@ def make_idle_flush_fn(idle_ms: int = IDLE_FLUSH_MS):
         for pdf in pdfs:
             for row in pdf.itertuples(index=False):
                 if row.event_type == "message":
-                    if msg is None and row.payload:
+                    if msg is None and row.payload:  # first-write-wins (:230-236)
                         msg = json.loads(row.payload)
                         end_ms = int(msg.get("end_at_ms", 0))
                 elif row.event_type == "add_parent":
@@ -199,14 +143,50 @@ def make_idle_flush_fn(idle_ms: int = IDLE_FLUSH_MS):
             json.dumps(children),
             end_ms,
         ))
-        # reset-on-activity idle timer (reference :186-193)
-        state.setTimeoutDuration(idle_ms)
-        return
+        arm_timer(state, end_ms)
 
     return fn
 
 
-def make_dual_timer_fn(idle_horizon_ms: int = IDLE_FLUSH_MS):
+def _event_time_timer(state: GroupState, end_ms: int | None) -> None:
+    """W2: event-time timer at ``end_at_ms`` (reference :159, :236)."""
+    if end_ms is not None:
+        state.setTimeoutTimestamp(int(end_ms))
+    else:
+        # Orphan update-only state (edge updates arrived but the 'message'
+        # event was dropped as late / lands in a later batch): without a
+        # timer this key would leak forever.  The reference cleans such keys
+        # via its concurrent 60 s processing-time idle flush, which Spark's
+        # one-timeout-kind constraint drops here — so register a fallback
+        # event-time eviction at watermark + the OOO horizon instead.  If the
+        # message event does arrive before that, the timer is re-registered
+        # to end_at_ms above; the timed-out branch emits nothing for
+        # msg-less state, so eviction is silent, matching the reference's
+        # idle flush of a bare-updates key (simpy_kafka_reader.py:303-310).
+        state.setTimeoutTimestamp(
+            state.getCurrentWatermarkMs() + ORPHAN_EVICT_HORIZON_MS
+        )
+
+
+def _idle_timer(idle_ms: int):
+    """W3: processing-time idle flush (reference ``simpy_kafka_reader.py:29,
+    248-254, 303-310`` — SIMPY_IDLE_FLUSH_MS).
+
+    On ``idle_ms`` of key inactivity the buffered record is emitted then
+    state cleared, so sparse keys produce output even if the watermark
+    stalls.  This policy trades the event-time emit for the idle flush —
+    the reference runs both timers at once, which is the documented
+    divergence (SURVEY.md §7.1).
+    """
+
+    def arm(state: GroupState, end_ms: int | None) -> None:
+        # reset-on-activity idle timer (reference :186-193)
+        state.setTimeoutDuration(idle_ms)
+
+    return arm
+
+
+def _dual_timer(idle_horizon_ms: int):
     """Dual-timer emit parity (reference ``simpy_kafka_reader.py:186-193,
     247-264, 303-310``): the reference runs an event-time timer at
     ``end_at_ms`` AND a 60 s processing-time idle flush concurrently per key.
@@ -228,40 +208,7 @@ def make_dual_timer_fn(idle_horizon_ms: int = IDLE_FLUSH_MS):
     deadline, matching the reference's idle flush of a bare-updates key.
     """
 
-    def fn(key, pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            msg_json, parents_json, children_json, end_ms = state.get
-        else:
-            msg_json, parents_json, children_json, end_ms = None, "[]", "[]", None
-        msg = json.loads(msg_json) if msg_json else None
-        parents: list[str] = json.loads(parents_json)
-        children: list[str] = json.loads(children_json)
-
-        if state.hasTimedOut:
-            # either deadline: emit what we have and evict
-            state.remove()
-            if msg is not None:
-                yield _emit_row(msg, parents, children)
-            return
-
-        for pdf in pdfs:
-            for row in pdf.itertuples(index=False):
-                if row.event_type == "message":
-                    if msg is None and row.payload:
-                        msg = json.loads(row.payload)
-                        end_ms = int(msg.get("end_at_ms", 0))
-                elif row.event_type == "add_parent":
-                    _append_unique(parents, row.other_id)
-                elif row.event_type == "add_child":
-                    _append_unique(children, row.other_id)
-
-        state.update((
-            json.dumps(msg) if msg is not None else None,
-            json.dumps(parents),
-            json.dumps(children),
-            end_ms,
-        ))
+    def arm(state: GroupState, end_ms: int | None) -> None:
         wm = state.getCurrentWatermarkMs()
         idle_deadline = wm + idle_horizon_ms
         deadline = idle_deadline if end_ms is None else min(
@@ -270,9 +217,23 @@ def make_dual_timer_fn(idle_horizon_ms: int = IDLE_FLUSH_MS):
         # a timer at or before the watermark is invalid; clamp to wm+1 so a
         # span whose end already passed emits at the next watermark tick
         state.setTimeoutTimestamp(max(deadline, wm + 1))
-        return
 
-    return fn
+    return arm
+
+
+def _aggregate(updates: DataFrame, watermark: str, arm_timer,
+               timeout: str) -> DataFrame:
+    return (
+        updates.withWatermark("event_ts", watermark)
+        .groupBy("key_id")
+        .applyInPandasWithState(
+            _fold(arm_timer),
+            outputStructType=OUTPUT_SCHEMA,
+            stateStructType=STATE_SCHEMA,
+            outputMode="append",
+            timeoutConf=timeout,
+        )
+    )
 
 
 def aggregate_updates_stream(updates: DataFrame,
@@ -282,34 +243,16 @@ def aggregate_updates_stream(updates: DataFrame,
     ``updates`` must have UPDATE_SCHEMA columns; output rows appear when the
     watermark passes each message's ``end_at_ms``.
     """
-    return (
-        updates.withWatermark("event_ts", watermark)
-        .groupBy("key_id")
-        .applyInPandasWithState(
-            aggregate_adjacency_fn,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    return _aggregate(updates, watermark, _event_time_timer,
+                      GroupStateTimeout.EventTimeTimeout)
 
 
 def aggregate_updates_stream_idle(updates: DataFrame,
                                   watermark: str = "30 seconds",
                                   idle_ms: int = IDLE_FLUSH_MS) -> DataFrame:
     """W3 mode: same aggregation, processing-time idle-flush emission."""
-    return (
-        updates.withWatermark("event_ts", watermark)
-        .groupBy("key_id")
-        .applyInPandasWithState(
-            make_idle_flush_fn(idle_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-        )
-    )
+    return _aggregate(updates, watermark, _idle_timer(idle_ms),
+                      GroupStateTimeout.ProcessingTimeTimeout)
 
 
 def aggregate_updates_stream_dual(updates: DataFrame,
@@ -318,18 +261,9 @@ def aggregate_updates_stream_dual(updates: DataFrame,
                                   ) -> DataFrame:
     """Dual-timer mode: event-time emit at ``end_at_ms`` AND idle flush when
     the watermark advances ``idle_horizon_ms`` past a key's last activity —
-    both paths in ONE operator (see :func:`make_dual_timer_fn`)."""
-    return (
-        updates.withWatermark("event_ts", watermark)
-        .groupBy("key_id")
-        .applyInPandasWithState(
-            make_dual_timer_fn(idle_horizon_ms),
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
+    both paths in ONE operator (see :func:`_dual_timer`)."""
+    return _aggregate(updates, watermark, _dual_timer(idle_horizon_ms),
+                      GroupStateTimeout.EventTimeTimeout)
 
 
 def span_message_events(spans: DataFrame) -> DataFrame:
@@ -348,24 +282,9 @@ def span_message_events(spans: DataFrame) -> DataFrame:
 
 
 def edge_update_events(edges: DataFrame) -> DataFrame:
-    """Edge stream -> add_child/add_parent update events (R4)."""
-    return edges.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("parent_id").alias("key_id"),
-                    F.lit("add_child").alias("event_type"),
-                    F.col("child_id").alias("other_id"),
-                    F.lit(None).cast("string").alias("payload"),
-                    F.col("event_ts"),
-                ),
-                F.struct(
-                    F.col("child_id").alias("key_id"),
-                    F.lit("add_parent").alias("event_type"),
-                    F.col("parent_id").alias("other_id"),
-                    F.lit(None).cast("string").alias("payload"),
-                    F.col("event_ts"),
-                ),
-            )
-        ).alias("e")
-    ).select("e.*")
+    """Edge stream -> add_child/add_parent update events (R4), carrying the
+    edge's ``event_ts``, in UPDATE_SCHEMA column order."""
+    return edge_updates(edges).select(
+        "key_id", "event_type", "other_id",
+        F.lit(None).cast("string").alias("payload"), "event_ts",
+    )

@@ -6,7 +6,8 @@ from __future__ import annotations
 
 import pytest
 
-from simpy__kafka__flink__kafka_spark.operators.linking import link_traces
+from simpy__kafka__flink__kafka_spark.operators.linking import (
+    aggregate_adjacency, link_edges, link_traces)
 from simpy__kafka__flink__kafka_spark.schemas import golden_messages
 from simpy__kafka__flink__kafka_spark.sources.generator import (
     closed_world_links, generate_trace_spans, inject_send_delays)
@@ -17,7 +18,10 @@ from simpy__kafka__flink__kafka_spark.sources.generator import (
 def test_generated_traces_match_closed_world(spark, seed, banded):
     spans = generate_trace_spans(n_traces=120, seed=seed, ip_pool_size=5)
     expect = closed_world_links(spans)
-    out = link_traces(golden_messages(spark, spans), banded=banded).collect()
+    msgs = golden_messages(spark, spans)
+    linked = (link_traces(msgs) if banded
+              else aggregate_adjacency(msgs, link_edges(msgs)))
+    out = linked.collect()
     got = {r["id"]: (list(r["parents"]), list(r["children"])) for r in out}
     assert got == expect
 

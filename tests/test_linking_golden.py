@@ -7,7 +7,8 @@ from __future__ import annotations
 
 import pytest
 
-from simpy__kafka__flink__kafka_spark.operators.linking import link_traces
+from simpy__kafka__flink__kafka_spark.operators.linking import (
+    aggregate_adjacency, link_edges, link_traces)
 from simpy__kafka__flink__kafka_spark.schemas import golden_messages
 
 G1 = [  # linear chain (test_chain_linking.py:20-24)
@@ -45,7 +46,11 @@ G3_EXPECT = {
 
 
 def _check(spark, rows, expect, banded):
-    out = link_traces(golden_messages(spark, rows), banded=banded).collect()
+    msgs = golden_messages(spark, rows)
+    if banded:
+        out = link_traces(msgs).collect()
+    else:
+        out = aggregate_adjacency(msgs, link_edges(msgs)).collect()
     got = {r["id"]: (sorted(r["parents"]), sorted(r["children"])) for r in out}
     assert got == expect
 
@@ -75,45 +80,6 @@ def test_zero_width_nesting(spark):
     out = {r["id"]: r for r in link_traces(golden_messages(spark, rows)).collect()}
     assert out["p"]["children"] == ["c"]
     assert out["c"]["parents"] == ["p"]
-
-
-def test_salted_banded_edges_match_plain(spark, sf_dir):
-    """Fragment-replicate salting (the burst-skew escape hatch) must return
-    the identical edge set at any salt factor."""
-    from simpy__kafka__flink__kafka_spark.operators.linking import (
-        link_edges_banded)
-    from simpy__kafka__flink__kafka_spark.plans.trace import (
-        messages_from_events)
-
-    msgs = messages_from_events(spark, sf_dir)
-    plain = {(r["parent_id"], r["child_id"])
-             for r in link_edges_banded(msgs).collect()}
-    for s in (4, 7):
-        salted = {(r["parent_id"], r["child_id"])
-                  for r in link_edges_banded(msgs, salt=s).collect()}
-        assert salted == plain
-
-
-def test_adaptive_salt_probe_and_parity(spark, sf_dir):
-    """The adaptive variant must (a) pick salt=1 on the uniform testdata
-    (probe finds no hot cell at the default budget) and (b) return the
-    plain edge set either way, including when a tiny budget forces
-    salting."""
-    from simpy__kafka__flink__kafka_spark.operators.linking import (
-        link_edges_banded, link_edges_banded_adaptive)
-    from simpy__kafka__flink__kafka_spark.plans.trace import (
-        messages_from_events)
-
-    msgs = messages_from_events(spark, sf_dir)
-    plain = {(r["parent_id"], r["child_id"])
-             for r in link_edges_banded(msgs).collect()}
-    uniform = {(r["parent_id"], r["child_id"])
-               for r in link_edges_banded_adaptive(msgs).collect()}
-    assert uniform == plain
-    forced = {(r["parent_id"], r["child_id"])
-              for r in link_edges_banded_adaptive(
-                  msgs, pair_budget=10).collect()}
-    assert forced == plain
 
 
 def test_selfip_zero_width_excludes_self_edges(spark):

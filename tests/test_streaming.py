@@ -206,108 +206,6 @@ def test_late_rows_dropped_before_state(spark, tmpdirs):
     assert all(r.win_start >= _dt.datetime(1970, 1, 1, 0, 1, 0) for r in rows)
 
 
-def test_adjacency_update_mode_matches_batch(spark, tmpdirs):
-    """A1's declarative update-mode twin: the LAST update emitted per key
-    equals the batch adjacency result."""
-    from simpy__kafka__flink__kafka_spark.streaming.pipeline import (
-        adjacency_update_mode)
-
-    _write_batches(spark, tmpdirs["in"], [G1])
-    spans = file_spans_source(spark, tmpdirs["in"], watermark="30 seconds")
-    p1 = link_traces_two_phase(
-        spans, tmpdirs["bridge"], tmpdirs["ck1"], watermark="30 seconds"
-    )
-    try:
-        p1.processAllAvailable()
-    finally:
-        p1.stop()
-
-    from simpy__kafka__flink__kafka_spark.streaming.stateful import (
-        UPDATE_SCHEMA)
-
-    updates = (
-        spark.readStream.schema(UPDATE_SCHEMA)
-        .option("latestFirst", "false")
-        .parquet(tmpdirs["bridge"])
-    )
-    q = (
-        adjacency_update_mode(updates)
-        .writeStream.format("memory")
-        .queryName(f"upd_{uuid.uuid4().hex[:8]}")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(f"SELECT * FROM {q.name}").collect()
-    finally:
-        q.stop()
-    # update mode may emit a key several times; the last emission wins
-    final = {}
-    for r in rows:
-        final[r.key_id] = (list(r.parents), list(r.children))
-    assert final == {
-        "id1": ([], ["id2"]),
-        "id2": (["id1"], ["id3"]),
-        "id3": (["id2"], []),
-    }
-
-
-def test_outer_join_emits_childless_spans(spark, tmpdirs):
-    """Left-outer stream-stream join: matched spans emit per child; a
-    childless span emits once with NULL child after the watermark closes
-    its window."""
-    from simpy__kafka__flink__kafka_spark.streaming.pipeline import (
-        streaming_link_edges_outer)
-
-    _write_batches(spark, tmpdirs["in"], [G1, FLUSH])
-    spans = file_spans_source(spark, tmpdirs["in"], watermark="1 seconds")
-    q = (
-        streaming_link_edges_outer(spans)
-        .writeStream.format("memory")
-        .queryName(f"outer_{uuid.uuid4().hex[:8]}")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(
-            f"SELECT parent_id, child_id FROM {q.name}"
-        ).collect()
-    finally:
-        q.stop()
-    got = {(r.parent_id, r.child_id) for r in rows}
-    assert ("id1", "id2") in got and ("id2", "id3") in got
-    assert ("id3", None) in got  # the leaf span surfaces with a NULL child
-
-
-def test_stream_static_enrichment(spark, tmpdirs):
-    """Stream-static join: spans pick up service names from a static dim
-    without any streaming state."""
-    from simpy__kafka__flink__kafka_spark.streaming.pipeline import (
-        enrich_spans_static)
-
-    services = spark.createDataFrame(
-        [("10.0.0.2", "main"), ("10.0.0.3", "sub1")], "ip string, svc string"
-    )
-    _write_batches(spark, tmpdirs["in"], [G1])
-    spans = file_spans_source(spark, tmpdirs["in"], watermark=None)
-    q = (
-        enrich_spans_static(spans, services)
-        .writeStream.format("memory")
-        .queryName(f"enr_{uuid.uuid4().hex[:8]}")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql(f"SELECT id, svc FROM {q.name}").collect()
-    finally:
-        q.stop()
-    got = {r.id: r.svc for r in rows}
-    assert got == {"id1": "main", "id2": "sub1", "id3": None}
-
-
 def test_available_now_backfill_drains_and_stops(spark, tmpdirs):
     """Trigger.AvailableNow: the streaming query drains everything already
     on disk in rate-limited micro-batches, then terminates itself — the
